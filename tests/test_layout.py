@@ -16,10 +16,23 @@ from financial_data_science_spark.operators.layout import fan_out_scan
 SF = "/root/testdata/sf0.001"
 
 
+def test_fan_width_floor_cap_and_unknown():
+    """fan_width is pure: no fan below the 8 KiB floor, one task per
+    24 KiB above it, capped at the session's parallelism, and the full
+    parallelism when the size estimate is unknown (-1)."""
+    from financial_data_science_spark.operators.layout import fan_width
+
+    assert fan_width(8 * 1024 - 1, 32) == 0
+    assert fan_width(8 * 1024, 32) == 1
+    assert fan_width(24 * 1024 + 1, 32) == 2
+    assert fan_width(10 << 20, 32) == 32
+    assert fan_width(-1, 4) == 4
+
+
 def test_fan_out_widens_underspit_scan(spark):
     from financial_data_science_spark.operators.layout import (
-        _FAN_BYTES_PER_TASK,
         _plan_size_bytes,
+        fan_width,
     )
     from financial_data_science_spark.sources.testdata import load_table
 
@@ -31,14 +44,14 @@ def test_fan_out_widens_underspit_scan(spark):
     # the session
     size = _plan_size_bytes(docs)
     assert size > 0
-    want = min(target, max(1, -(-size // _FAN_BYTES_PER_TASK)))
+    want = fan_width(size, target)
     assert fanned.rdd.getNumPartitions() == want
     assert fanned.rdd.getNumPartitions() > docs.rdd.getNumPartitions()
 
 
 def test_fan_out_skips_trivially_small_frame(spark):
     """The r15 size floor: a frame whose optimizer estimate is below
-    SPARK_GRAFT_FAN_MIN_BYTES comes back IDENTITY — no exchange, no
+    the fan floor (_FAN_MIN_BYTES) comes back IDENTITY — no exchange, no
     tasks spent parallelizing work smaller than the exchange itself."""
     from financial_data_science_spark.sources.testdata import load_table
 

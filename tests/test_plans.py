@@ -401,13 +401,12 @@ _ANN_PLAN_FINGERPRINTS = {
     "ann_pq_topk":         {"Exchange hashpartitioning": 2, "BroadcastHashJoin": 0, "BroadcastNestedLoopJoin": 1, "Window": 3},
     "ann_ivf_topk":        {"Exchange hashpartitioning": 2, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 3},
     "ann_ivfpq_topk":      {"Exchange hashpartitioning": 3, "BroadcastHashJoin": 2, "BroadcastNestedLoopJoin": 0, "Window": 3},
-    # r15: +2 exchanges — the ENCODE lineage (assign + residual +
-    # pq_encode) now fans the raw (id, vec) input BEFORE the assignment
-    # so those row-local stages parallelize too (the TRAINING lineage
-    # keeps its partitioning), and the size-derived fan widths
-    # (layout.fan_out_scan) make the two fan exchanges non-identical so
-    # they no longer collapse into one textual node.
-    "ann_ivfpq_residual":  {"Exchange hashpartitioning": 4, "BroadcastHashJoin": 2, "BroadcastNestedLoopJoin": 0, "Window": 3},
+    # The ENCODE lineage (assign + residual + pq_encode) fans the raw
+    # (id, vec) input BEFORE the assignment so those row-local stages
+    # parallelize too (the TRAINING lineage keeps its partitioning);
+    # its hash-exchange count depends on the fan widths and is derived
+    # by _residual_exchanges below.
+    "ann_ivfpq_residual":  {"BroadcastHashJoin": 2, "BroadcastNestedLoopJoin": 0, "Window": 3},
     "ann_ivfpq_refined":   {"Exchange hashpartitioning": 4, "BroadcastHashJoin": 4, "BroadcastNestedLoopJoin": 0, "Window": 6},
     "ann_ivfpq_query_only": {"Exchange hashpartitioning": 1, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 3},
     # r15: +1 deliberate fan exchange (fan_out_scan on the corpus side,
@@ -419,22 +418,105 @@ _ANN_PLAN_FINGERPRINTS = {
 }
 
 
-def test_ann_family_plan_fingerprints(spark):
+def _residual_exchanges(widths: list) -> int:
+    """Hash exchanges of ann_ivfpq_residual from its two fan widths
+    (layout.fan_width of the encode input, then of pq_encode's input).
+    The top-k window adds one.  The encode fan is one textual node per
+    reference (the coded side and the cluster join-back), when it is
+    wider than the one-partition scan.  pq_encode's fan adds a node only
+    when it is wider still; at equal widths (both capped at a small
+    session's parallelism) it is a no-op."""
+    enc, pq = widths
+    return 1 + 2 * (enc > 1) + (pq > max(enc, 1))
+
+
+def test_ann_family_plan_fingerprints(spark, monkeypatch):
     """Every ANN catalog entry's executed plan must match its pinned
     operator-count fingerprint exactly (see comment above)."""
+    from financial_data_science_spark.operators import layout
     from financial_data_science_spark.queries import Q, clear_ivfpq_index_cache
 
+    widths = []
+    fan_width = layout.fan_width
+
+    def recording_fan_width(size_bytes, parallelism):
+        widths.append(fan_width(size_bytes, parallelism))
+        return widths[-1]
+
+    monkeypatch.setattr(layout, "fan_width", recording_fan_width)
     diffs = {}
     for name, want in _ANN_PLAN_FINGERPRINTS.items():
+        widths.clear()
         try:
             plan = _plan(Q[name](spark, SF))
         finally:
             spark.catalog.clearCache()
+        if name == "ann_ivfpq_residual":
+            want = {**want, "Exchange hashpartitioning": _residual_exchanges(widths)}
         got = {pat: plan.count(pat) for pat in want}
         if got != want:
-            diffs[name] = {"want": want, "got": got}
+            diffs[name] = {"want": want, "got": got, "fan_widths": list(widths)}
     clear_ivfpq_index_cache()
     assert not diffs, diffs
+
+
+_JOIN_NODES = (
+    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+)
+
+
+def _exchanges_and_joins(df) -> tuple:
+    plan = _plan(df)
+    return (
+        plan.count("Exchange hashpartitioning"),
+        sum(plan.count(node) for node in _JOIN_NODES),
+    )
+
+
+def test_minhash_family_plan_fingerprints(spark):
+    """Pinned (hash exchanges, joins) for the MinHash-LSH family, whose
+    entry points compose one shared copy of each stage (signature
+    aggregate, band explode, bucket self-join, estimate, exact verify):
+    composing them must not add an exchange or a join.
+
+    Every signature lineage fans the corpus out by id, and that fan's
+    exchange replaces the signature aggregate's own, so a lineage costs
+    one hash exchange fanned or not.  jaccard_pairs' verify side fans
+    its shingle arrays too, which adds one exchange per side only when
+    the fan is wider than the scan."""
+    from financial_data_science_spark.functions import minhash_index as MHI
+    from financial_data_science_spark.functions import similarity as SIM
+    from financial_data_science_spark.operators.layout import (
+        _plan_size_bytes,
+        fan_width,
+    )
+
+    docs = load_table(spark, SF, "documents")
+    fanned = fan_width(
+        _plan_size_bytes(docs), spark.sparkContext.defaultParallelism
+    ) > docs.rdd.getNumPartitions()
+    index = MHI.minhash_build_index(docs.filter(F.col("doc_id") % 5 != 0))
+    got = {
+        "minhash_candidates": _exchanges_and_joins(SIM.minhash_candidates(docs)),
+        "jaccard_pairs": _exchanges_and_joins(SIM.jaccard_pairs(docs)),
+        "minhash_query_index": _exchanges_and_joins(
+            MHI.minhash_query_index(docs.filter(F.col("doc_id") % 5 == 0), index)
+        ),
+    }
+    want = {
+        # two banded lineages (bucket self-join) + two signature
+        # attaches; joins: bucket self-join + two attaches
+        "minhash_candidates": (4, 3),
+        # two banded lineages + two fanned verify sides; joins: bucket
+        # self-join + two verify joins
+        "jaccard_pairs": (2 + 2 * fanned, 3),
+        # increment banded + increment signatures + the in-memory
+        # index's buckets and signatures; joins: bucket probe + two
+        # signature attaches
+        "minhash_query_index": (4, 3),
+    }
+    assert got == want, {"got": got, "want": want, "fanned": fanned}
 
 
 def test_windowed_anti_join_pushes_both_predicates(spark):
