@@ -44,6 +44,12 @@ together).  Parity pinned by test (frozen-census increment equals the
 batch run under the same census) and by the
 ``minhash_index_frozen_census`` catalog oracle.
 
+Every hashing stage (signature aggregate, stop-shingle census, band
+explode, signature-match estimate) is the one copy in
+functions/similarity.py that the batch pipeline runs too; this module
+only wires them into build, probe and append, and owns the at-rest
+format.
+
 Reference: the reference repo has no incremental dedup (its dedup
 recipes re-run in full); this is part of the LLM-training-pipeline
 surface built for the 100 TB ingestion story.
@@ -55,43 +61,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions.similarity import (
-    lsh_band_key as _band_key,
+    _banded,
+    _est_jaccard,
     minhash_signatures,
     stop_shingle_census,
 )
-
-
-def _banded(
-    sig: DataFrame,
-    id_col: str,
-    out_id: str,
-    num_hashes: int,
-    bands: int,
-    portable: bool,
-) -> DataFrame:
-    """(out_id, band, bhash) rows from a minhash_signatures frame.
-
-    The signature array is deliberately NOT carried through the band
-    explode: the bucket join shuffles 3 small ints per row, and the
-    similarity estimate re-joins the one-row-per-doc signature tables
-    AFTER pair dedup (the band_candidates lesson: hauling the k-long
-    array through both sides of the bucket join costs more than the
-    extra join)."""
-    rpb = num_hashes // bands
-    return sig.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(b, rpb, portable).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select(out_id, "__band__.band", "__band__.bhash")
 
 
 def minhash_build_index(
@@ -224,21 +198,13 @@ def minhash_query_index(
     nsig = sig.select(
         F.col(id_col).alias("new_id"), F.col("__sig__").alias("__nsig__")
     )
-    matched = F.size(
-        F.filter(
-            F.zip_with(
-                F.col("__nsig__"), F.col("__csig__"), lambda a, b: a == b
-            ),
-            lambda x: x,
-        )
-    )
     out = (
         pairs.join(nsig, "new_id")
         .join(index["sigs"], "corpus_id")
         .select(
             "new_id",
             "corpus_id",
-            (matched / F.lit(float(num_hashes))).alias("est_jaccard"),
+            _est_jaccard("__nsig__", "__csig__", num_hashes).alias("est_jaccard"),
         )
     )
     if min_est is not None:

@@ -477,6 +477,134 @@ def embedding_near_dups(
 
 
 # ---------------------------------------------------------------- minhash
+#
+# The MinHash-LSH family is composed from one copy of each stage:
+# _coeffs (the affine hash draw), _shingle_hashes (the explode, per hash
+# family), _stop_set (the max_df census), _signature (the min-hash
+# aggregate), _banded (the band explode), _bucket_pairs (the bucket
+# self-join), _est_jaccard (the signature-match estimate) and
+# _verify_jaccard (the exact verify join).  The public entry points
+# below, and functions/minhash_index.py, only wire them together.
+
+def _coeffs(num_hashes: int, seed: int) -> list:
+    """The ``(a, b)`` coefficients of the ``num_hashes`` affine min-hashes
+    ``(a*h + b) mod 2^31-1``, drawn from ``random.Random(seed)`` — the
+    one draw every MinHash path (and every SQL oracle) replays."""
+    import random
+
+    from financial_data_science_spark.functions.porthash import MOD
+
+    rng = random.Random(seed)
+    return [(rng.randrange(1, MOD), rng.randrange(0, MOD))
+            for _ in range(num_hashes)]
+
+
+def _shingle_hashes(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    portable: bool,
+    census: bool,
+) -> tuple:
+    """The distinct k-word shingles of each doc, exploded one row per
+    (doc, shingle) under one hash family: ``(frame, census_key,
+    base_hash)``.  ``base_hash`` is the 31-bit column the affine family
+    mixes; ``census_key`` names the column a stop-shingle census counts
+    and anti-joins on.
+
+    Portable family (porthash; recomputable in DuckDB): composed
+    one-fold-per-token gram hashes, no string materialization at all —
+    the signature is min-of-affine over the hash values, so neither gram
+    strings nor duplicate hash values matter (porthash.gram_hashes31 has
+    the distinct-order argument).  With ``census`` the frame pairs each
+    distinct gram STRING with its hash in one pass
+    (porthash.gram_structs31): the string is the census key, because a
+    31-bit hash collides at corpus scale (~n^2/2^31 odds).
+
+    Production family: xxhash64 of each distinct shingle, the string
+    dropped right at the explode, so the frame that gets
+    checkpointed/shuffled is (id, long) instead of (id, string).  The
+    64-bit hash is both the census key (a collision needs ~n^2/2^64
+    odds to merge two shingles' counts) and, mod 2^31-1, the base
+    hash."""
+    from financial_data_science_spark.functions.porthash import (
+        MOD,
+        gram_hashes31,
+        gram_structs31,
+    )
+    from financial_data_science_spark.functions.text import tokens
+
+    ids = F.col(id_col)
+    if not portable:
+        exploded = docs.select(
+            ids, F.explode(word_shingles(text_col, k)).alias("__shingle__")
+        ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
+        return exploded, "__h64__", F.pmod(F.col("__h64__"), F.lit(MOD))
+    toks = tokens(F.lower(F.col(text_col) if isinstance(text_col, str) else text_col))
+    if not census:
+        exploded = docs.select(
+            ids, F.explode(gram_hashes31(toks, k)).alias("__h0__")
+        )
+        return exploded, None, F.col("__h0__")
+    exploded = docs.select(
+        ids, F.explode(gram_structs31(toks, k)).alias("__g__")
+    ).select(
+        id_col,
+        F.col("__g__.s").alias("__shingle__"),
+        F.col("__g__.h").alias("__h0pre__"),
+    )
+    return exploded, "__shingle__", F.col("__h0pre__")
+
+
+def _stop_set(
+    exploded: DataFrame, key: str, max_df: float | int, docs: DataFrame
+) -> DataFrame:
+    """The STOP SHINGLES of ``exploded`` (one row per doc and distinct
+    shingle): the ``key`` values in more than ``max_df`` docs.  Shingles
+    are per-doc distinct, so count(*) per shingle IS the document
+    frequency.  sklearn-style dispatch on TYPE, not value: float =
+    fraction of the ``docs`` corpus (1.0 = keep everything; counting the
+    corpus is one job), int = absolute document count.  One combinable
+    aggregate; the result is tiny (only the >max_df tail) and
+    broadcastable."""
+    if isinstance(max_df, float):
+        if not 0.0 < max_df <= 1.0:
+            raise ValueError(
+                f"float max_df must be a fraction in (0, 1], got {max_df}; "
+                "pass an int for an absolute document count"
+            )
+        limit = int(max_df * docs.count())
+    else:
+        limit = int(max_df)
+    return (
+        exploded.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__df__"))
+        .filter(F.col("__df__") > limit)
+        .select(key)
+    )
+
+
+def _signature(
+    exploded: DataFrame, id_col: str, base_hash: Column, coeffs: list
+) -> DataFrame:
+    """The min-hash aggregate: per doc, ``h{i} = min((a_i*h + b_i) mod p)``
+    over its base hashes, plus the ``__sig__`` array.  One string hash
+    per shingle; the k-family is affine mixes of it — k multiply-adds
+    instead of k string hashes, in ONE combinable hash aggregate rather
+    than a k-wide nested array expression per row."""
+    from financial_data_science_spark.functions.porthash import MOD
+
+    sig = exploded.select(id_col, base_hash.alias("__h0__")).groupBy(id_col).agg(
+        *[
+            F.min((F.col("__h0__") * F.lit(a) + F.lit(b)) % F.lit(MOD)).alias(f"h{i}")
+            for i, (a, b) in enumerate(coeffs)
+        ]
+    )
+    return sig.withColumn(
+        "__sig__", F.array(*[F.col(f"h{i}") for i in range(len(coeffs))])
+    )
+
 
 def minhash_band_keys(
     docs: DataFrame,
@@ -498,7 +626,7 @@ def minhash_band_keys(
     shingle array once (``transform``), then each of the ``num_hashes``
     affine min-hashes is an ``array_min`` over that cached array, and
     each band key is the same 2-row fold used by the banded bucket
-    join.  Same coefficients (``random.Random(seed)``), same portable
+    join.  Same coefficients (:func:`_coeffs`), same portable
     31-bit arithmetic, so values are identical to the batch/oracle
     pipeline — proven by parity test.
 
@@ -507,8 +635,6 @@ def minhash_band_keys(
     the batch path).  Works on static AND streaming frames; the k-wide
     expression stays manageable because ``num_hashes`` here is the
     streaming dial (default 8), not the batch 64."""
-    import random
-
     from financial_data_science_spark.functions.porthash import MOD, gram_hashes31
     from financial_data_science_spark.functions.text import tokens
 
@@ -516,9 +642,7 @@ def minhash_band_keys(
         "band key fold is written for rows_per_band=2 (matches the "
         "banded bucket join and its oracle)"
     )
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD))
-              for _ in range(num_hashes)]
+    coeffs = _coeffs(num_hashes, seed)
     # composed one-fold-per-token gram hashes (porthash.gram_hashes31);
     # its post-hash array_distinct changes nothing downstream — the
     # signature is an array_min and the emptiness filter sees distinct
@@ -564,10 +688,10 @@ def minhash_signatures(
     """Per-doc MinHash signature as ``h0..h{k-1}`` columns + ``__sig__`` array.
 
     Physical shape: explode distinct shingles -> ONE hash aggregate with k
-    ``min(xxhash64(seed_i, shingle))`` columns (map-side partial combine).
-    This deliberately avoids a k-wide nested array expression per row,
-    which blows up the Catalyst plan and codegen when the signature is
-    re-referenced per band.
+    ``min((a_i*h + b_i) mod p)`` columns over one base hash per shingle
+    (map-side partial combine).  This deliberately avoids a k-wide nested
+    array expression per row, which blows up the Catalyst plan and
+    codegen when the signature is re-referenced per band.
 
     ``portable=True`` swaps the base shingle hash from xxhash64 to the
     arithmetic polynomial in porthash (recomputable in DuckDB — used by
@@ -593,8 +717,6 @@ def minhash_signatures(
     production); mutually exclusive with ``max_df``, which would
     re-census and drift the kept-shingle set.
     """
-    import random
-
     if max_df is not None and stop_frame is not None:
         raise ValueError(
             "minhash_signatures: pass max_df (census THIS frame) or "
@@ -611,76 +733,10 @@ def minhash_signatures(
     # The max_df census count() below peeks the PRE-fan frame (r15):
     # counting the fanned frame executed the repartition's shuffle-map
     # stage at plan-build time for a metadata-grade count.
-    raw_docs = docs
-    docs = fan_out_scan(docs, id_col)
-    rng = random.Random(seed)
-    p = (1 << 31) - 1
-    coeffs = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_hashes)]
-    tcol = F.col(text_col) if isinstance(text_col, str) else text_col
-    if portable and max_df is None and stop_frame is None:
-        # composed one-fold-per-token gram hashes, no string
-        # materialization at all: the signature is min-of-affine over
-        # the hash values, so neither gram strings nor duplicate hash
-        # values matter (porthash.gram_hashes31 docstring has the
-        # distinct-order argument)
-        from financial_data_science_spark.functions.porthash import gram_hashes31
-        from financial_data_science_spark.functions.text import tokens
-
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(gram_hashes31(tokens(F.lower(tcol)), shingle_k)).alias(
-                "__h0__"
-            ),
-        )
-        sig = exploded.groupBy(id_col).agg(
-            *[
-                F.min((F.col("__h0__") * F.lit(a) + F.lit(b)) % F.lit(p)).alias(
-                    f"h{i}"
-                )
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        )
-        return sig.withColumn(
-            "__sig__", F.array(*[F.col(f"h{i}") for i in range(num_hashes)])
-        )
-    if portable:
-        # max_df needs the gram STRING too (the stop-shingle census and
-        # anti-join key) — pair each distinct gram string with its
-        # composed hash in one pass (porthash.gram_structs31): same
-        # distinct rows as the string-only explode, hash precomputed
-        from financial_data_science_spark.functions.porthash import gram_structs31
-        from financial_data_science_spark.functions.text import tokens
-
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(gram_structs31(tokens(F.lower(tcol)), shingle_k)).alias(
-                "__g__"
-            ),
-        ).select(
-            id_col,
-            F.col("__g__.s").alias("__shingle__"),
-            F.col("__g__.h").alias("__h0pre__"),
-        )
-    else:
-        # hash each distinct shingle ONCE and drop the string right at
-        # the explode: every downstream consumer (the df census under
-        # max_df AND the signature aggregate) keys on the 64-bit hash,
-        # so the frame that gets checkpointed/shuffled is (id, long)
-        # instead of (id, string).  Censusing document frequency on
-        # xxhash64 is safe where the portable path's 31-bit hash is
-        # not: a collision needs ~n^2/2^64 odds to merge two shingles'
-        # counts (vs n^2/2^31 — real at corpus scale), which is why the
-        # oracle path keeps its string census and this one does not.
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(word_shingles(text_col, shingle_k)).alias("__shingle__"),
-        ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
-    base_hash = (
-        F.col("__h0pre__")
-        if portable
-        else F.pmod(F.col("__h64__"), F.lit(p))
+    exploded, census_key, base_hash = _shingle_hashes(
+        fan_out_scan(docs, id_col), id_col, text_col, shingle_k, portable,
+        census=max_df is not None or stop_frame is not None,
     )
-    census_key = "__shingle__" if portable else "__h64__"
     if max_df is not None:
         # the census AND the hash aggregate both consume the exploded
         # frame — materialize it once so the tokenize+shingle+explode
@@ -698,25 +754,7 @@ def minhash_signatures(
         # frame's lineage is dropped (same lifecycle note as
         # embedding_near_dups) — not session-permanent.
         exploded = exploded.localCheckpoint(eager=True)
-        # shingles are per-doc distinct, so count(*) per shingle IS the
-        # document frequency; sklearn-style dispatch on TYPE, not value:
-        # float = fraction of the corpus (1.0 = keep everything), int =
-        # absolute document count
-        if isinstance(max_df, float):
-            if not 0.0 < max_df <= 1.0:
-                raise ValueError(
-                    f"float max_df must be a fraction in (0, 1], got {max_df}; "
-                    "pass an int for an absolute document count"
-                )
-            limit = int(max_df * raw_docs.count())
-        else:
-            limit = int(max_df)
-        stop = (
-            exploded.groupBy(census_key)
-            .agg(F.count(F.lit(1)).alias("__df__"))
-            .filter(F.col("__df__") > limit)
-            .select(census_key)
-        )
+        stop = _stop_set(exploded, census_key, max_df, docs)
         exploded = exploded.join(F.broadcast(stop), census_key, "left_anti")
     elif stop_frame is not None:
         # frozen census: the stop set was computed elsewhere (the
@@ -726,28 +764,13 @@ def minhash_signatures(
         exploded = exploded.join(
             F.broadcast(stop_frame.select(census_key)), census_key, "left_anti"
         )
-    exploded = exploded.select(
-        id_col,
-        # one string hash per shingle; the k-family is affine mixes of it
-        # (a_i*h+b_i mod p) — 64 multiply-adds instead of 64 string hashes
-        base_hash.alias("__h0__"),
-    )
-    sig = exploded.groupBy(id_col).agg(
-        *[
-            F.min((F.col("__h0__") * F.lit(a) + F.lit(b)) % F.lit(p)).alias(f"h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    )
-    return sig.withColumn("__sig__", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]))
+    return _signature(exploded, id_col, base_hash, _coeffs(num_hashes, seed))
 
 
 def lsh_band_key(b: int, rows_per_band: int, portable: bool) -> Column:
     """Band key over ``h{i}`` signature columns — THE one definition of
     the LSH band fold (murmur3-backed ``F.hash`` in production, the
-    65537-fold 31-bit arithmetic key when a SQL oracle must replay it).
-    Shared by :func:`minhash_candidates` and the incremental index
-    (functions/minhash_index.py), folded here at the r12 re-seal after
-    one round of documented duplication behind the sealed-floor pin."""
+    65537-fold 31-bit arithmetic key when a SQL oracle must replay it)."""
     cols = [
         F.col(f"h{i}")
         for i in range(b * rows_per_band, (b + 1) * rows_per_band)
@@ -758,6 +781,75 @@ def lsh_band_key(b: int, rows_per_band: int, portable: bool) -> Column:
     for c in cols:  # (acc*65537 + h) % p — h < p so products stay < 2^48
         acc = (acc * F.lit(65537) + c) % F.lit((1 << 31) - 1)
     return acc
+
+
+def _banded(
+    sig: DataFrame,
+    id_col: str,
+    out_id: str,
+    num_hashes: int,
+    bands: int,
+    portable: bool,
+) -> DataFrame:
+    """The band explode: ``(out_id, band, bhash)`` rows from a
+    :func:`minhash_signatures` frame, the rows every bucket join keys on.
+
+    The signature array is deliberately NOT carried through the band
+    explode: the bucket join shuffles 3 small ints per row, and the
+    estimate re-joins the one-row-per-doc signatures AFTER pair dedup.
+    Hauling the k-long array through both sides of the bucket join (at
+    k=64/bands=32, a 520-byte array on every one of the bands x docs
+    rows) and zipping it per COLLISION costs more than the extra join
+    (measured ~2x on the warm path)."""
+    rpb = num_hashes // bands
+    return sig.select(
+        F.col(id_col).alias(out_id),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        lsh_band_key(b, rpb, portable).alias("bhash"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("__band__"),
+    ).select(out_id, "__band__.band", "__band__.bhash")
+
+
+def _bucket_pairs(
+    sig: DataFrame, id_col: str, num_hashes: int, bands: int, portable: bool
+) -> DataFrame:
+    """Distinct ``(left_id, right_id)`` pairs, ``left_id < right_id``,
+    whose band keys collide in any band: one self-join of the banded
+    frame on ``(band, bhash)`` — bucket-local, never a cross join.  The
+    signature aggregate under both sides is one plan, so its exchange
+    is computed ONCE at runtime (AQE stage reuse)."""
+    banded = _banded(sig, id_col, "__id__", num_hashes, bands, portable)
+    return (
+        banded.alias("l")
+        .join(banded.alias("r"), ["band", "bhash"])
+        .filter(F.col("l.__id__") < F.col("r.__id__"))
+        .select(
+            F.col("l.__id__").alias("left_id"),
+            F.col("r.__id__").alias("right_id"),
+        )
+        .dropDuplicates(["left_id", "right_id"])
+    )
+
+
+def _est_jaccard(lsig: str, rsig: str, num_hashes: int) -> Column:
+    """The signature-match estimate of Jaccard similarity: the fraction
+    of the ``num_hashes`` min-hashes on which the two signature array
+    columns agree."""
+    matched = F.size(
+        F.filter(
+            F.zip_with(F.col(lsig), F.col(rsig), lambda a, b: a == b),
+            lambda x: x,
+        )
+    )
+    return matched / F.lit(float(num_hashes))
 
 
 def stop_shingle_census(
@@ -785,49 +877,17 @@ def stop_shingle_census(
     drift the kept-shingle set and silently stale every at-rest
     signature.  One combinable count aggregate over the exploded grams;
     the result is tiny (only the >max_df tail) and broadcastable."""
-    from financial_data_science_spark.functions.porthash import gram_structs31
-    from financial_data_science_spark.functions.text import tokens
     from financial_data_science_spark.operators.layout import fan_out_scan
 
     # parallelize the gram explode off an under-split scan (count() per
     # shingle is partitioning-order-independent) — no-op at scale.
     # The max_df corpus count() peeks the PRE-fan frame (r15, same
     # argument as minhash_signatures).
-    raw_docs = docs
-    docs = fan_out_scan(docs, id_col)
-    tcol = F.col(text_col) if isinstance(text_col, str) else text_col
-    if portable:
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    gram_structs31(tokens(F.lower(tcol)), shingle_k),
-                    lambda g: g["s"],
-                )
-            ).alias("__shingle__"),
-        )
-        census_key = "__shingle__"
-    else:
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(word_shingles(text_col, shingle_k)).alias("__shingle__"),
-        ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
-        census_key = "__h64__"
-    if isinstance(max_df, float):
-        if not 0.0 < max_df <= 1.0:
-            raise ValueError(
-                f"float max_df must be a fraction in (0, 1], got {max_df}; "
-                "pass an int for an absolute document count"
-            )
-        limit = int(max_df * raw_docs.count())
-    else:
-        limit = int(max_df)
-    return (
-        exploded.groupBy(census_key)
-        .agg(F.count(F.lit(1)).alias("__df__"))
-        .filter(F.col("__df__") > limit)
-        .select(census_key)
+    exploded, census_key, _ = _shingle_hashes(
+        fan_out_scan(docs, id_col), id_col, text_col, shingle_k, portable,
+        census=True,
     )
+    return _stop_set(exploded, census_key, max_df, docs)
 
 
 def minhash_candidates(
@@ -856,121 +916,31 @@ def minhash_candidates(
     ``max_df`` / ``stop_frame`` forward to :func:`minhash_signatures`
     (census here vs apply a frozen census).
     """
-    rows_per_band = num_hashes // bands
-
-    def band_key(b: int):
-        return lsh_band_key(b, rows_per_band, portable)
-
     sig = minhash_signatures(
         docs, id_col, text_col, shingle_k, num_hashes, seed, portable=portable,
         max_df=max_df, stop_frame=stop_frame,
     )
     # Bucket join on BARE (id, band, bhash) rows, THEN attach signatures
-    # by id to the deduped pairs (r14).  The previous shape hauled the
-    # k-long __sig__ array through BOTH sides of the band join — at
-    # k=64/bands=32 that is a 520-byte array on every one of the
-    # bands x docs rows (an ~88 MB broadcast build at sf0.1) and a
-    # per-COLLISION zip_with, where one per distinct pair suffices
-    # (est_jaccard is a function of the two signatures only, so every
-    # collision row of a pair carries the same value — dedup-then-score
-    # is value-identical).  The signature aggregate is referenced three
-    # times (banded + both attach sides) but its doc_id exchange is
-    # computed ONCE at runtime (AQE stage reuse; ReusedExchange
+    # by id to the deduped pairs (r14): est_jaccard is a function of the
+    # two signatures only, so every collision row of a pair carries the
+    # same value — dedup-then-score is value-identical, one zip per
+    # distinct pair instead of per collision.  The signature aggregate is
+    # referenced three times (banded + both attach sides) but its doc_id
+    # exchange is computed ONCE at runtime (AQE stage reuse; ReusedExchange
     # verified in the executed plan).  Measured 1.59s -> 1.40s warm on
     # the sf0.1 production entry, output frame equal row-for-row.
-    banded = sig.select(
-        F.col(id_col).alias("__id__"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("bhash"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select("__id__", "__band__.band", "__band__.bhash")
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bhash"])
-        .filter(F.col("l.__id__") < F.col("r.__id__"))
-        .select(
-            F.col("l.__id__").alias("left_id"),
-            F.col("r.__id__").alias("right_id"),
-        )
-        .dropDuplicates(["left_id", "right_id"])
-    )
+    pairs = _bucket_pairs(sig, id_col, num_hashes, bands, portable)
     ls = sig.select(F.col(id_col).alias("left_id"), F.col("__sig__").alias("__lsig__"))
     rs = sig.select(F.col(id_col).alias("right_id"), F.col("__sig__").alias("__rsig__"))
-    matched = F.size(
-        F.filter(
-            F.zip_with(F.col("__lsig__"), F.col("__rsig__"), lambda a, b: a == b),
-            lambda x: x,
-        )
-    )
     return (
         pairs.join(ls, "left_id")
         .join(rs, "right_id")
         .select(
             "left_id",
             "right_id",
-            (matched / F.lit(float(num_hashes))).alias("est_jaccard"),
+            _est_jaccard("__lsig__", "__rsig__", num_hashes).alias("est_jaccard"),
         )
     )
-
-
-def band_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    max_df: float | int | None = None,
-) -> DataFrame:
-    """Bare LSH candidate pairs — band bucket join WITHOUT carrying the
-    signature array through the shuffle.
-
-    When every candidate is exactly verified downstream (jaccard_pairs),
-    the per-pair ``est_jaccard`` prefilter doesn't pay for itself: hauling
-    the k-long signature array through both sides of the bucket join and
-    zipping it per joined row costs more than exact-verifying the extra
-    candidates (measured ~2x on the warm path).  Self-join on one banded
-    plan also lets Spark reuse the shuffle exchange for both sides.
-    """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        docs, id_col, text_col, shingle_k, num_hashes, seed, max_df=max_df
-    )
-    banded = sig.select(
-        F.col(id_col).alias("__id__"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            *[
-                                F.col(f"h{i}")
-                                for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                            ]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select("__id__", "__band__.band", "__band__.bhash")
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bhash"])
-        .filter(F.col("l.__id__") < F.col("r.__id__"))
-        .select(
-            F.col("l.__id__").alias("left_id"),
-            F.col("r.__id__").alias("right_id"),
-        )
-    )
-    return pairs.dropDuplicates(["left_id", "right_id"])
 
 
 # ---------------------------------------------------------------- simhash
@@ -1032,6 +1002,45 @@ def hamming64(a: Column, b: Column) -> Column:
 
 # ---------------------------------------------------------------- jaccard
 
+def _shingle_sets(
+    docs: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """``(id, __sh__, __n__)``: each doc's distinct k-word shingle array
+    and its size; docs with no shingles are dropped."""
+    return (
+        docs.select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
+        .withColumn("__n__", F.size("__sh__"))
+        .filter(F.col("__n__") > 0)
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, sh: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """The exact verify join: attach both sides' full shingle arrays
+    (``sh``, from :func:`_shingle_sets`) to the ``(left_id, right_id)``
+    candidates by id, score exact Jaccard
+    ``|A∩B| / (|A| + |B| - |A∩B|)`` and keep pairs at or above
+    ``threshold``."""
+    la = sh.select(F.col(id_col).alias("left_id"), F.col("__sh__").alias("__la__"),
+                   F.col("__n__").alias("__nl__"))
+    ra = sh.select(F.col(id_col).alias("right_id"), F.col("__sh__").alias("__ra__"),
+                   F.col("__n__").alias("__nr__"))
+    verified = (
+        cand.join(la, "left_id")
+        .join(ra, "right_id")
+        .withColumn("__common__", F.size(F.array_intersect("__la__", "__ra__")))
+        .withColumn(
+            "jaccard",
+            F.col("__common__")
+            / (F.col("__nl__") + F.col("__nr__") - F.col("__common__")),
+        )
+    )
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "left_id", "right_id", "jaccard"
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1050,11 +1059,13 @@ def jaccard_pairs(
 
     ``strategy='lsh'`` (default, scale path): MinHash-LSH candidates tuned
     for high recall at the threshold (r=2 rows/band, b=32 bands: collision
-    probability 1-(1-j^2)^32 = 0.9999 at j=0.5), then a cheap signature
-    estimate pre-filter, then EXACT Jaccard verification on the full
-    shingle arrays — only surviving pairs pay the array_intersect.  The
-    reported jaccard is exact; completeness is bounded by LSH recall
-    (>=99.99% at the threshold).
+    probability 1-(1-j^2)^32 = 0.9999 at j=0.5), taken from the same
+    bucket self-join as :func:`minhash_candidates` on the production
+    hashes, then EXACT Jaccard verification of every candidate on the
+    full shingle arrays.  No signature estimate is computed: verifying
+    the extra candidates costs less than hauling signatures into the
+    pairs.  The reported jaccard is exact; completeness is bounded by
+    LSH recall (>=99.99% at the threshold).
 
     ``strategy='prefix'``: fully exact prefix filtering (below).  Right
     choice when text is natural (frequency-skewed shingles); on adversarial
@@ -1068,36 +1079,15 @@ def jaccard_pairs(
         # codegen-fused recomputes).  Don't "deduplicate" this work.
         from financial_data_science_spark.operators.layout import fan_out_scan
 
-        cand = band_candidates(
-            docs, id_col, text_col, shingle_k=k, num_hashes=64, bands=32,
-            max_df=max_df,
+        num_hashes, bands = 64, 32
+        sig = minhash_signatures(
+            docs, id_col, text_col, k, num_hashes, max_df=max_df
         )
+        cand = _bucket_pairs(sig, id_col, num_hashes, bands, portable=False)
         # fan the verify-side shingle build off an under-split scan
         # (shingle arrays are row-local; no-op at scale)
-        sh = (
-            fan_out_scan(docs, id_col)
-            .select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
-            .withColumn("__n__", F.size("__sh__"))
-            .filter(F.col("__n__") > 0)
-        )
-        la = sh.select(F.col(id_col).alias("left_id"), F.col("__sh__").alias("__la__"),
-                       F.col("__n__").alias("__nl__"))
-        ra = sh.select(F.col(id_col).alias("right_id"), F.col("__sh__").alias("__ra__"),
-                       F.col("__n__").alias("__nr__"))
-        verified = (
-            cand.select("left_id", "right_id")
-            .join(la, "left_id")
-            .join(ra, "right_id")
-            .withColumn("__common__", F.size(F.array_intersect("__la__", "__ra__")))
-            .withColumn(
-                "jaccard",
-                F.col("__common__")
-                / (F.col("__nl__") + F.col("__nr__") - F.col("__common__")),
-            )
-        )
-        return verified.filter(F.col("jaccard") >= threshold).select(
-            "left_id", "right_id", "jaccard"
-        )
+        sh = _shingle_sets(fan_out_scan(docs, id_col), id_col, text_col, k)
+        return _verify_jaccard(cand, sh, id_col, threshold)
     return _jaccard_pairs_prefix(docs, id_col, text_col, k, threshold)
 
 
@@ -1122,11 +1112,7 @@ def _jaccard_pairs_prefix(
     Shuffles: explode+count (df), explode+join (candidates), two id joins
     (verify) — all equi-joins on keys that stay balanced at scale.
     """
-    sh = (
-        docs.select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
-        .withColumn("__n__", F.size("__sh__"))
-        .filter(F.col("__n__") > 0)
-    )
+    sh = _shingle_sets(docs, id_col, text_col, k)
     ex = sh.select(id_col, F.explode("__sh__").alias("shingle"))
     dfreq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df__"))
     ordered = (
@@ -1168,23 +1154,7 @@ def _jaccard_pairs_prefix(
         .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
     )
-    la = sh.select(F.col(id_col).alias("left_id"), F.col("__sh__").alias("__la__"),
-                   F.col("__n__").alias("__nl__"))
-    ra = sh.select(F.col(id_col).alias("right_id"), F.col("__sh__").alias("__ra__"),
-                   F.col("__n__").alias("__nr__"))
-    verified = (
-        cand.join(la, "left_id")
-        .join(ra, "right_id")
-        .withColumn("__common__", F.size(F.array_intersect("__la__", "__ra__")))
-        .withColumn(
-            "jaccard",
-            F.col("__common__")
-            / (F.col("__nl__") + F.col("__nr__") - F.col("__common__")),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "left_id", "right_id", "jaccard"
-    )
+    return _verify_jaccard(cand, sh, id_col, threshold)
 
 
 def exact_dedup(
