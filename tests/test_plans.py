@@ -415,6 +415,16 @@ _ANN_PLAN_FINGERPRINTS = {
     "hard_negative_mining": {"Exchange hashpartitioning": 2, "BroadcastHashJoin": 0, "BroadcastNestedLoopJoin": 1, "Window": 3},
     "hard_negative_mining_production": {"Exchange hashpartitioning": 2, "BroadcastHashJoin": 5, "BroadcastNestedLoopJoin": 0, "Window": 6},
     "hard_negative_mining_ivf": {"Exchange hashpartitioning": 1, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 3},
+    # Exact cosine scoring sites outside the ANN ladder proper: the
+    # hyperplane-LSH near-dup join, the capped SemDeDup pair join, the
+    # SemDeDup index probes and the recall harness (cosine_topk + IVF).
+    "embedding_near_dups": {"Exchange hashpartitioning": 1, "BroadcastHashJoin": 5, "BroadcastNestedLoopJoin": 0, "Window": 0},
+    "semantic_dedup_capped": {"Exchange hashpartitioning": 14, "BroadcastHashJoin": 4, "BroadcastNestedLoopJoin": 0, "SortMergeJoin": 6, "Window": 6},
+    "semdedup_index_probe": {"Exchange hashpartitioning": 0, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 0},
+    "semdedup_probe_stratified": {"Exchange hashpartitioning": 0, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 0},
+    "semdedup_pool_probe": {"Exchange hashpartitioning": 0, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 0},
+    "semdedup_pool_probe_capped": {"Exchange hashpartitioning": 1, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0, "Window": 2},
+    "ann_recall_at_k": {"Exchange hashpartitioning": 9, "BroadcastHashJoin": 3, "BroadcastNestedLoopJoin": 1, "SortMergeJoin": 1, "Window": 12},
 }
 
 
