@@ -289,13 +289,14 @@ def semantic_dedup_pairs(
         F.count(F.lit(1)).over(Window.partitionBy("cell")).alias("__cnt__"),
     )
     # exact pair scoring on FLAT-UNPACKED columns with per-ROW norms
-    # (similarity._flat_dot): the per-pair cosine() fold is interpreted
+    # (similarity._pair_dot): the per-pair cosine() fold is interpreted
     # (CodegenFallback) and re-derives both norms per candidate; the
     # flat multiply-add chain compiles under codegen and is the same
     # IEEE addition sequence, so every c6 double is bit-identical
     from financial_data_science_spark.functions.similarity import (
-        _flat_cols,
-        _flat_dot,
+        _carry,
+        _pair_cos,
+        _pair_dot,
         norm as _norm,
     )
 
@@ -308,8 +309,7 @@ def semantic_dedup_pairs(
     l = ranked.select(
         "cell",
         F.col(id_col).alias("left_id"),
-        *(_flat_cols(F.col(vec_col), "l", dim) if dim > 0
-          else [F.col(vec_col).alias("__lv__")]),
+        *_carry(vec_col, "l", dim),
         _norm(F.col(vec_col)).alias("__lnorm__"),
         F.col("__rn__").alias("__lrn__"),
         F.col("__cnt__"),
@@ -317,21 +317,10 @@ def semantic_dedup_pairs(
     r = ranked.select(
         "cell",
         F.col(id_col).alias("right_id"),
-        *(_flat_cols(F.col(vec_col), "r", dim) if dim > 0
-          else [F.col(vec_col).alias("__rv__")]),
+        *_carry(vec_col, "r", dim),
         _norm(F.col(vec_col)).alias("__rnorm__"),
         F.col("__rn__").alias("__rrn__"),
     )
-    if dim > 0:
-        raw_cos = _flat_dot("l", "r", dim) / (
-            F.col("__lnorm__") * F.col("__rnorm__")
-        )
-    else:
-        from financial_data_science_spark.functions.similarity import dot as _dot
-
-        raw_cos = _dot(F.col("__lv__"), F.col("__rv__")) / (
-            F.col("__lnorm__") * F.col("__rnorm__")
-        )
     # Two join arms so the JOIN FAN-OUT itself is bounded, not just the
     # emitted pairs: cells within cap join on the cell key (per-key
     # product <= cap^2); cells STILL over cap join on a rank-block key
@@ -364,7 +353,9 @@ def semantic_dedup_pairs(
     )
     return (
         small.unionByName(big)
-        .withColumn("c6", F.round(raw_cos, 6))
+        .withColumn(
+            "c6", _pair_cos(_pair_dot("l", "r", dim), "__lnorm__", "__rnorm__")
+        )
         .filter(F.col("c6") >= tau)
         .select(
             "cell",
@@ -631,28 +622,16 @@ def _rep_rows(index: dict, reps: str) -> DataFrame:
     return index["cells"].filter((F.col("__cnt__") <= cap) | rep_pick)
 
 
-def _pair_cos(qn_col: str, cv_col: str, cn_col: str):
-    """``round(cosine(__qv__, cv), 6)`` with BOTH norms hoisted to
-    per-row columns (``qn_col`` under the probe projection, ``cn_col``
-    under the candidate projection): the per-PAIR work drops from three
-    interpreted O(dim) folds to one dot fold.  Same operands in the same
-    order — ``dot / (norm(q) * norm(c))`` — so every c6 double is
-    bit-identical to the inline ``cosine`` it replaces (r15)."""
-    from financial_data_science_spark.functions.similarity import dot as _dot
-
-    return F.round(
-        _dot(F.col("__qv__"), F.col(cv_col))
-        / (F.col(qn_col) * F.col(cn_col)),
-        6,
-    )
-
-
 def _join_reps(
     probes: DataFrame, index: dict, tau: float, query_id: str, reps: str
 ) -> DataFrame:
     """The representative-capped cell join half of the index probe,
     over an already-routed batch (``(query_id, __qv__, __cell__)``)."""
-    from financial_data_science_spark.functions.similarity import norm as _norm
+    from financial_data_science_spark.functions.similarity import (
+        _pair_cos,
+        dot as _dot,
+        norm as _norm,
+    )
 
     id_col, vec_col = index["id_col"], index["vec_col"]
     cap = index["cap"]
@@ -663,7 +642,7 @@ def _join_reps(
         probes.withColumnRenamed("__cell__", "cell")
         .withColumn("__qn__", _norm(F.col("__qv__")))
         .join(rep_rows.withColumnRenamed("cell", "cell"), "cell")
-        .withColumn("c6", _pair_cos("__qn__", vec_col, "__cn__"))
+        .withColumn("c6", _pair_cos(_dot(F.col("__qv__"), F.col(vec_col))))
         .filter(F.col("c6") >= tau)
         .select(
             query_id,
@@ -716,7 +695,11 @@ def semdedup_query_with_pool(
     policy's truncation label, pool pairs are truncated only under
     ``pool_cap``.  Ids in ``queries`` and ``pool`` must be disjoint
     from each other and from the indexed ids."""
-    from financial_data_science_spark.functions.similarity import norm as _norm
+    from financial_data_science_spark.functions.similarity import (
+        _pair_cos,
+        dot as _dot,
+        norm as _norm,
+    )
 
     id_col = index["id_col"]
     vec_col = index["vec_col"]
@@ -774,7 +757,7 @@ def semdedup_query_with_pool(
         qcells.withColumnRenamed("__cell__", "cell")
         .withColumn("__qn__", _norm(F.col("__qv__")))
         .join(cands, "cell")
-        .withColumn("c6", _pair_cos("__qn__", "__cv__", "__cn__"))
+        .withColumn("c6", _pair_cos(_dot(F.col("__qv__"), F.col("__cv__"))))
         .filter(F.col("c6") >= tau)
         .select(
             query_id,

@@ -8305,10 +8305,10 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the join condition, so excluded same-label rows never reach
     scoring."""
     from financial_data_science_spark.functions.similarity import (
-        _flat_cols,
-        _flat_dot,
+        _carry,
+        _pair_cos,
+        _pair_dot,
         _vec_dim,
-        dot,
         norm,
     )
     from financial_data_science_spark.operators.layout import fan_out_scan
@@ -8318,46 +8318,30 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bit-identical), scoring on FLAT-UNPACKED columns (codegen
     # multiply-add chain, same IEEE order as the interpreted fold — the
     # 200k-pair score frame is exactly the compute-dominated regime the
-    # r14 flat gate measured winning), and the corpus side fanned off an
-    # under-split scan so the |Q| x |C| projection parallelizes.  The
-    # fold path stays as the dim-unknown fallback.
+    # r14 flat path measured winning), and the corpus side fanned off an
+    # under-split scan so the |Q| x |C| projection parallelizes.
     dim = _vec_dim(emb, "embedding")
     corpus = fan_out_scan(emb, "vec_id")
-    if dim > 0:
-        q = F.broadcast(
-            emb.filter(F.col("vec_id") < 20).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("label").alias("qlabel"),
-                *_flat_cols(F.col("embedding"), "q", dim),
-                norm(F.col("embedding")).alias("__qn__"),
-            )
+    q = F.broadcast(
+        emb.filter(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("label").alias("qlabel"),
+            *_carry("embedding", "q", dim),
+            norm(F.col("embedding")).alias("__qn__"),
         )
-        c = corpus.select(
-            "vec_id",
-            "label",
-            *_flat_cols(F.col("embedding"), "c", dim),
-            norm(F.col("embedding")).alias("__cn__"),
-        )
-        sexpr = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
-    else:
-        q = F.broadcast(
-            emb.filter(F.col("vec_id") < 20).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("label").alias("qlabel"),
-                F.col("embedding").alias("__qv__"),
-                norm(F.col("embedding")).alias("__qn__"),
-            )
-        )
-        c = corpus.withColumn("__cn__", norm(F.col("embedding")))
-        sexpr = dot(F.col("__qv__"), F.col("embedding")) / (
-            F.col("__qn__") * F.col("__cn__")
-        )
+    )
+    c = corpus.select(
+        "vec_id",
+        "label",
+        *_carry("embedding", "c", dim),
+        norm(F.col("embedding")).alias("__cn__"),
+    )
     scored = c.join(q, F.col("label") != F.col("qlabel")).select(
         "query_id",
         "qlabel",
         F.col("vec_id").alias("negative_id"),
         F.col("label").alias("neg_label"),
-        F.round(sexpr, 6).alias("s"),
+        _pair_cos(_pair_dot("q", "c", dim)).alias("s"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("s").desc(), F.col("negative_id").asc()

@@ -82,6 +82,7 @@ def on_arrival_nearest(
     fits the non-negative-id convention of the testdata; pass your own
     reserved id for corpora with negative ids)."""
     from financial_data_science_spark.functions.similarity import (
+        _pair_cos,
         _probe_clusters,
         dot,
         norm,
@@ -99,11 +100,7 @@ def on_arrival_nearest(
             query_id,
             ts_col,
             F.col(id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("__qv__"), F.col(vec_col))
-                / (F.col("__qn__") * F.col("__cn__")),
-                6,
-            ).alias("__s__"),
+            _pair_cos(dot(F.col("__qv__"), F.col(vec_col))).alias("__s__"),
         )
     )
     if flush_ts is not None:

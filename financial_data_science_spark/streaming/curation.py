@@ -255,6 +255,7 @@ def curate_and_tag_stream(
         contamination_screen,
     )
     from financial_data_science_spark.functions.similarity import (
+        _pair_cos,
         _probe_clusters,
         dot,
         minhash_band_keys,
@@ -308,11 +309,7 @@ def curate_and_tag_stream(
             "__w__",
             "__q__",
             F.col(vec_id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("__qv__"), F.col(vec_col))
-                / (F.col("__qn__") * F.col("__cn__")),
-                6,
-            ).alias("__s__"),
+            _pair_cos(dot(F.col("__qv__"), F.col(vec_col))).alias("__s__"),
         )
     )
     return (
