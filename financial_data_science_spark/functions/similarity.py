@@ -71,15 +71,11 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
     a STREAMING frame (no eager job possible), which sends
     :func:`_carry` and :func:`_pair_dot` to the array fold.
 
-    Input contract (r15, flagged by the r14 advisor): the flat-unpacked
-    scoring paths gated on this peek assume UNIFORM vector dims.  A row
-    whose array is SHORTER than the peeked dim nulls out exactly like
-    the fold (missing getItem -> null product -> null sum); a row
-    LONGER than the peeked dim would score on its dim-prefix where the
-    fold nulls the pair (zip_with pads the shorter side) — so ragged
-    inputs mixing lengths ABOVE the peeked dim are outside the
-    contract.  Every embedding table in this repo (and any real ANN
-    corpus) is fixed-dim."""
+    The flat unpack scores ``dim`` elements of every row, so it holds
+    the frame to the fixed-dim contract: :func:`_carry` raises a named
+    error when a non-null vector has another length (a null vector
+    keeps its null score).  Every embedding table in this repo (and any
+    real ANN corpus) is fixed-dim."""
     if df.isStreaming:
         return 0
     row = df.select(F.size(F.col(vec_col)).alias("n")).first()
@@ -90,13 +86,34 @@ def _carry(vec_col: str, prefix: str, dim: int) -> list:
     """The columns one side of an exact pair score carries: ``dim``
     doubles ``__<prefix>0__..`` unpacked from the array when the dim is
     known, else the array itself as ``__<prefix>v__`` (the fold form).
-    Score the pair with :func:`_pair_dot` over the same prefixes."""
+    Score the pair with :func:`_pair_dot` over the same prefixes.
+
+    The unpack enforces the fixed-dim contract: a non-null vector whose
+    length is not ``dim`` raises an error naming the column, the dim and
+    the length found, where it would otherwise score on a prefix (longer)
+    or fail on an unnamed array index (shorter)."""
     vec = F.col(vec_col)
     if dim <= 0:
         return [vec.alias(f"__{prefix}v__")]
+    # ONE guard per row, on element 0 (every pair chain reads it): a
+    # guard per element bloats the tree dim-fold and measured ~1.5x
+    # slower on cosine_topk (sf0.1, local[4]).  The other elements use
+    # the tolerant get(), so a short row fails only with the named
+    # error, in any order the projection evaluates its columns.
+    ok = vec.isNull() | (F.size(vec) == dim)
+    broken = F.raise_error(
+        F.concat(
+            F.lit(
+                f"fixed-dim vector contract broken: column {vec_col!r} "
+                f"holds vectors of dim {dim}, found one of length "
+            ),
+            F.size(vec).cast("string"),
+        )
+    )
+    elems = [F.when(ok, vec.getItem(0)).otherwise(broken)]
+    elems += [F.get(vec, i) for i in range(1, dim)]
     return [
-        vec.getItem(i).cast("double").alias(f"__{prefix}{i}__")
-        for i in range(dim)
+        e.cast("double").alias(f"__{prefix}{i}__") for i, e in enumerate(elems)
     ]
 
 

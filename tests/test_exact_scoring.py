@@ -1,6 +1,7 @@
 """The exact pair-scoring stage of similarity.py (_carry / _pair_dot /
 _pair_cos): the flat multiply-add chain and the array-fold fallback
-give the same rows, and the fold is what a streaming frame gets.
+give the same rows, the fold is what a streaming frame gets, and the
+flat unpack enforces the fixed-dim vector contract with a named error.
 """
 
 from __future__ import annotations
@@ -73,3 +74,47 @@ def test_vec_dim_is_zero_on_streaming_frame(spark):
         F.array(F.col("value").cast("double")).alias("embedding")
     )
     assert SIM._vec_dim(stream, "embedding") == 0
+
+
+def _score_all_pairs(fn, corpus):
+    if fn == "cosine_topk":
+        return SIM.cosine_topk(corpus, corpus, k=4)
+    ids = corpus.select("vec_id")
+    cand = (
+        ids.withColumnRenamed("vec_id", "query_id")
+        .crossJoin(ids.withColumnRenamed("vec_id", "neighbor_id"))
+        .filter("query_id != neighbor_id")
+    )
+    return SIM.rerank_exact(cand, corpus, k=4)
+
+
+def _corpus(spark, row2):
+    return spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 1.0]), (2, row2), (3, [0.5, 0.5])],
+        "vec_id long, embedding array<double>",
+    )
+
+
+@pytest.mark.parametrize("row2", [[1.0, 0.0, 5.0], [0.5]], ids=["longer", "shorter"])
+@pytest.mark.parametrize("fn", ["cosine_topk", "rerank_exact"])
+def test_fixed_dim_contract_raises_named_error(spark, fn, row2):
+    """A vector whose length differs from the peeked dim breaks the
+    fixed-dim contract of the flat unpack: the error says so, with the
+    column, the expected dim and the length found."""
+    with pytest.raises(Exception) as err:
+        _score_all_pairs(fn, _corpus(spark, row2)).collect()
+    msg = str(err.value)
+    assert "fixed-dim vector contract" in msg, msg
+    assert (
+        "column 'embedding' holds vectors of dim 2, "
+        f"found one of length {len(row2)}"
+    ) in msg
+
+
+@pytest.mark.parametrize("fn", ["cosine_topk", "rerank_exact"])
+def test_null_vector_keeps_null_score(spark, fn):
+    out = _score_all_pairs(fn, _corpus(spark, None)).collect()
+    assert out and all(
+        (r["score"] is None) == (2 in (r["query_id"], r["neighbor_id"]))
+        for r in out
+    )
