@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions import similarity as SIM
 from financial_data_science_spark.sources.testdata import load_table
-
-SF = "/root/testdata/sf0.001"
+from tests.test_plans import SF  # the sf0.001 table set
 
 
 def _rows(df) -> list:
